@@ -1,6 +1,8 @@
 """Catalog: parquet loaders, temp-view registration, and scalar anchors.
 
 Mirrors the reference's ingestion + session-state pattern:
+  - one parquet scan per table (``load_table``), partitioned as the files
+    split, with ``events.ts`` normalized to a microsecond timestamp;
   - table registration (ref ``src/TyreStore Challenge.py:65-72``) →
     ``register_views`` (temp views over parquet; no metastore needed);
   - the ``MAX(carts.createdTS)`` scalar pulled to the driver and spliced into
@@ -55,9 +57,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
             pass  # read-only in some deployments; session.get_spark sets it
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan with embedded schema (SURVEY.md §2 S2).
 
     ``events.ts`` is TIMESTAMP(NANOS) in the fixture parquet — Spark has no
@@ -65,94 +65,15 @@ def load_table(
     (``spark.sql.legacy.parquet.nanosAsLong``) and truncated to microseconds
     here, matching DuckDB's ns→us truncation exactly.
 
-    ``spread=True`` opts a compute-heavy consumer into the input-parallelism
-    floor (see ``_maybe_spread``): a byte-small scan arrives in fewer split
-    partitions than the cluster has cores, and every narrow stage chained on
-    it (array folds, md5/tokenize pipelines, Arrow codec kernels, broadcast-
-    join probes) runs serial regardless of core count — the guide §2.5
-    "one huge unsplittable file" case in miniature. Opt-in, not default:
-    writer/export paths must keep the scan's row layout, and broadcast-tiny
-    dims would pay a shuffle for nothing.
+    The scan keeps the file layout's split partitioning: no repartition is
+    added here, so consumers that need a particular distribution ask for it
+    in their own plans.
     """
     ensure_session_confs(spark)
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         df = _heal_events_ts(df)
-    if spread:
-        df = _maybe_spread(spark, df, sf_dir, name)
     return df
-
-
-# Deterministic spread keys (hash repartition by the table's primary id —
-# never round-robin/rand, which breaks reproducibility under task retry;
-# guide §2.5). Only tables a compute-heavy operator consumes are listed.
-_SPREAD_KEYS = {
-    "orders": "o_orderkey",
-    "lineitem": "l_orderkey",
-    "events": "event_id",
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-}
-# Below this on-disk size the frame is broadcast-grade anyway and the extra
-# exchange costs more than the serial stage it would fix.
-_SPREAD_MIN_BYTES = 256 * 1024
-# Mirror of the spark.sql.files.maxPartitionBytes default used only to
-# ESTIMATE the scan's split count for the gate below (exact value is not
-# load-bearing: the gate only distinguishes "far fewer splits than cores"
-# from "plenty of splits").
-_SPREAD_SPLIT_BYTES = 128 * 1024 * 1024
-_SPREAD_BYTES_CACHE: dict[tuple[str, float], int] = {}
-
-
-def _table_disk_bytes(path: str) -> int:
-    """On-disk size of a driver-LOCAL parquet path (file or directory).
-
-    Sizes are cached per (path, mtime) so a fixture rewritten in-process
-    (probe tooling resharding tables) refreshes its spread decision
-    (ADVICE r18). Non-local sf_dirs return 0 → spread disables — a
-    perf-only, never-wrong fallback; production object-store deployments
-    have split counts >> cores anyway, where the spread gate is a no-op.
-    """
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        return 0
-    key = (path, mtime)
-    if key not in _SPREAD_BYTES_CACHE:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        else:
-            total = os.path.getsize(path)
-        _SPREAD_BYTES_CACHE[key] = total
-    return _SPREAD_BYTES_CACHE[key]
-
-
-def _maybe_spread(
-    spark: SparkSession, df: DataFrame, sf_dir: str, name: str
-) -> DataFrame:
-    """Input-parallelism floor (round-18 optimization, guide §2.5): when the
-    scan's estimated split count is below the core count, hash-repartition
-    by the table's id so downstream per-row compute parallelizes. At
-    production sizes the split count dwarfs the core count and this is a
-    no-op — scale-neutral by construction. Results are partitioning-
-    invariant (pinned repo-wide by tests/test_layout_invariance_contract)."""
-    key = _SPREAD_KEYS.get(name)
-    if key is None:
-        return df
-    # Parameterized kill-switch (r19): lets cold A/B probes and non-local
-    # deployments turn the input-parallelism floor off without code edits.
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") in ("0", "off", "false"):
-        return df
-    nbytes = _table_disk_bytes(table_path(sf_dir, name))
-    if nbytes < _SPREAD_MIN_BYTES:
-        return df
-    parallelism = spark.sparkContext.defaultParallelism
-    est_splits = max(1, nbytes // _SPREAD_SPLIT_BYTES)
-    if est_splits >= parallelism:
-        return df
-    return df.repartition(parallelism, key)
 
 
 def _heal_events_ts(df: DataFrame) -> DataFrame:

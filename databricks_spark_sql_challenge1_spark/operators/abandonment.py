@@ -228,9 +228,9 @@ def top_abandoned_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on the order key; pair explosion is bounded by per-order line counts
     (~7 max in TPC-H-like data), not by table size.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    ce1 = load_table(spark, sf_dir, "lineitem", spread=True).alias("ce1")
-    ce2 = load_table(spark, sf_dir, "lineitem", spread=True).alias("ce2")
+    orders = load_table(spark, sf_dir, "orders")
+    ce1 = load_table(spark, sf_dir, "lineitem").alias("ce1")
+    ce2 = load_table(spark, sf_dir, "lineitem").alias("ce2")
     grouped = (
         ce1.join(
             ce2,

@@ -33,7 +33,7 @@ ORDER BY segment
 )
 def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT / UNION ALL over customer segments."""
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     open_c = orders.where(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("custkey")
     ).distinct()
@@ -65,7 +65,7 @@ ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST
 )
 def rollup_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP aggregation (status → status+priority → grand total)."""
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -100,7 +100,7 @@ def monthly_order_trend_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG analytic window over the monthly open-order series (the windowed
     re-expression of the reference's self-join MoM pattern #7 — one shuffle
     instead of two subquery scans)."""
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     m = (
         orders.where(F.col("o_orderstatus") == "O")
         .groupBy(
@@ -133,7 +133,7 @@ ORDER BY o_orderpriority ASC
 )
 def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot order counts: status values → columns."""
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     # coalesce AFTER the pivot: an absent (priority, status) combination
     # yields a NULL pivot cell — the aggregate's own coalesce never sees
     # the empty group — while the oracle's SUM(CASE)+COALESCE emits 0
@@ -156,8 +156,8 @@ def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _approx_topk_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw HLL estimates per partkey (engine-specific values — accuracy
     pinned in tests/test_extensions.py, not driver-hashable)."""
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    lineitem = load_table(spark, sf_dir, "lineitem", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey, "right")
         .where(F.col("o_orderstatus") == "O")
@@ -204,8 +204,8 @@ def approx_topk_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mergeable sketch; the exact twin exists to make the sketch
     driver-falsifiable at verification scale.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    lineitem = load_table(spark, sf_dir, "lineitem", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     both = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey, "right")
         .where(F.col("o_orderstatus") == "O")
@@ -278,7 +278,7 @@ def approx_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound (TRUE); a drifting sketch flips a boolean and fails the driver
     hash. Production ships only the mergeable sketch.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     eps = PCT_RANK_EPS
     agg = orders.groupBy("o_orderstatus").agg(
         F.expr(
@@ -316,7 +316,7 @@ def approx_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _approx_percentiles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw t-digest estimates (engine-specific values — accuracy pinned in
     tests/test_extensions.py, not driver-hashable)."""
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderstatus")
         .agg(
@@ -351,7 +351,7 @@ def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB ``quantile_cont``). The 100 TB variant swaps in
     ``approx_percentile`` (t-digest, single-pass mergeable sketch) — kept
     exact here so the oracle can replay it."""
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderstatus")
         .agg(
@@ -385,7 +385,7 @@ def cube_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation; bit order of grouping_id (leftmost column = MSB)
     matches DuckDB/Postgres GROUPING().
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -431,7 +431,7 @@ def orders_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: stack is a narrow projection (Expand, no shuffle beyond
     the upstream aggregate); the wide aggregate itself is one shuffle.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     # avg_value via integer cents: SUM(BIGINT)/COUNT is the identical
     # double on both engines regardless of row order, and scale-0 ROUND
     # is the boundary-safe class (every N.5 is binary-exact) — where
@@ -488,7 +488,7 @@ def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same bound and same approx-cutoff escape hatch as
     ``customer_rfm_segments``).
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     s = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.round(F.sum("o_totalprice"), 2).alias("spend")
     )
@@ -539,7 +539,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate — same output contract, no global sort). Every ORDER BY
     carries a custkey tiebreak so tile assignment is engine-deterministic.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     anchor = orders.agg(F.max("o_orderdate").alias("a"))
     m = (
         orders.groupBy(F.col("o_custkey").alias("custkey"))
@@ -658,7 +658,7 @@ def customer_rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both engines, never on a ROUND half-boundary. ``monetary`` rows
     therefore report cutoffs in cents.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     anchor = orders.agg(F.max("o_orderdate").alias("a"))
     m = (
         orders.groupBy(F.col("o_custkey").alias("custkey"))
@@ -815,7 +815,7 @@ def orders_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebraic invariant: merged result == direct aggregation over the
     full table.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
 
     # Round-19, rejected after measurement (VERDICT r18 #7 suggested a
     # shared (month, side)-grained frame here): a single grouped aggregate
@@ -999,7 +999,7 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     a day's batch touches only its customers' open versions (close the
     current row, append the new one), never the history — implemented and
     pinned merged==rebuilt by ``scd2_cdc_apply`` below."""
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     return _scd2_build(_scd2_monthly(orders)).orderBy(
         F.col("c_custkey").asc(), F.col("version").asc()
     )
@@ -1036,7 +1036,7 @@ def scd2_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         last_order_datetime,
     )
 
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     anchor = last_order_datetime(spark, sf_dir)
     cutoff = F.trunc(F.lit(anchor.strftime("%Y-%m-%d")).cast("date"), "month")
     # Round-19 (VERDICT r18 #7): this query's frame graph referenced
@@ -1145,8 +1145,8 @@ def partkey_skew_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= 64 histogram rows — group-size profiling costs one extra map-side
     agg over data already shuffled by the key, never a new corpus pass.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    lineitem = load_table(spark, sf_dir, "lineitem", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     g = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey, "right")
         .where(F.col("o_orderstatus") == "O")
@@ -1269,9 +1269,9 @@ def orders_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (or broadcast when the dim side fits), never more than one pass
     per fact table.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    lineitem = load_table(spark, sf_dir, "lineitem", spread=True)
+    lineitem = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
 
     def one(name: str, viol_df: DataFrame, checked_df: DataFrame) -> DataFrame:
@@ -1484,8 +1484,8 @@ def topk_products_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist here for verification; a production heavy-hitter pass ships
     ONLY the mergeable 1024-cell sketch per partition/shard.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    lineitem = load_table(spark, sf_dir, "lineitem", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     ab = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .where(
@@ -1620,7 +1620,7 @@ def distinct_orders_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard. Accuracy floor pinned in tests (relative error ≤ 2/sqrt(K) on
     the fixture groups).
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     keys = orders.select("o_orderstatus", "o_orderkey").distinct()
     hashed = keys.select(
         "o_orderstatus",
@@ -1741,7 +1741,7 @@ def distinct_orders_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the second over K·shards rows only) next to the direct pass the
     certification needs; production ships the partial sketches alone.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
     keys = orders.select(
         "o_orderstatus", F.year("o_orderdate").alias("yr"), "o_orderkey"
     ).distinct()
@@ -1955,9 +1955,7 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches, and the exact counts / membership flags are two groupBys over
     the same frame. Per-pair values are unchanged (3-scale parity
     re-proven); the assembly is a 3-row multi-frame join instead of 21
-    crossJoins. Spread dropped r19: the per-row work (one md5 of a short
-    string) is trivial, and the cold A/B measured the extra exchange as a
-    net loss (sides build 1.25 s with spread vs 0.75 s without, warmed)."""
+    crossJoins."""
     orders = load_table(spark, sf_dir, "orders")
     k = KMV_K
 

@@ -57,6 +57,7 @@ def connected_components(
     holds by construction; a caller with external edges must pre-semi-join
     pairs on nodes).
     Returns (doc_id, cluster_id) with cluster_id = min reachable node id.
+    Raises ``RuntimeError`` when no fixpoint is reached in ``max_rounds``.
     Algorithm and scale shape documented in the module docstring; the
     algebra is pinned against a pure-Python union-find on random graphs in
     tests/test_properties.py.
@@ -121,6 +122,11 @@ def connected_components(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        # never return a non-fixpoint labelling as if it were components
+        raise RuntimeError(
+            f"connected_components did not converge in {max_rounds} rounds"
+        )
     return labels
 
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,7 +143,7 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     work across both plan references, which is the legitimate §5 sharing.
     """
     pairs = dedup_simhash_pairs(spark, sf_dir).select("doc_1", "doc_2")
-    nodes = load_table(spark, sf_dir, "documents", spread=True).select("doc_id")
+    nodes = load_table(spark, sf_dir, "documents").select("doc_id")
     return connected_components(nodes, pairs)
 
 
@@ -236,7 +242,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     labels = _cluster_labels(spark, sf_dir)
     tok = (
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens"),
@@ -541,8 +547,8 @@ def copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join. Doubles ROUND to 6 on both engines; top-k is
     TakeOrderedAndProject with a full tiebreak.
     """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    lineitem = load_table(spark, sf_dir, "lineitem", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     basket = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .where(F.col("o_orderstatus") == "O")
@@ -752,7 +758,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_1", "vec_2")
         .localCheckpoint()  # sparse pair set; avoid re-running LSH per CC round
     )
-    nodes = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id")
+    nodes = load_table(spark, sf_dir, "embeddings").select("vec_id")
     labels = connected_components(nodes, pairs)
     return (
         labels.select(

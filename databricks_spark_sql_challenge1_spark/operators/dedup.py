@@ -51,7 +51,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixed-width key → smaller shuffle than raw text) with partial
     aggregation map-side.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.groupBy("text")
         .agg(
@@ -78,7 +78,7 @@ ORDER BY fingerprint ASC
 )
 def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized-fingerprint dedup (case/whitespace-insensitive)."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "))
     return (
         docs.groupBy(fp.alias("fingerprint"))
@@ -166,7 +166,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     The hot list is tiny by construction (only keys with df > CAP), so it
     ships as a broadcast left_anti join — no extra shuffle of the index.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     return _ngram_jaccard(docs, NGRAM_DF_CAP)
 
 
@@ -297,7 +297,7 @@ def _text_simhash_unsorted(
     shared (doc_id, hx) token frame (see ``_distinct_token_md5``)."""
     if _toks is None:
         _toks = _distinct_token_md5(
-            load_table(spark, sf_dir, "documents", spread=True)
+            load_table(spark, sf_dir, "documents")
         )
     toks = _toks.withColumn(
         "h", F.conv(F.substring("hx", 1, 8), 16, 10).cast("bigint")
@@ -544,7 +544,7 @@ def dedup_simhash_wide_pairs(
     ``dedup_simhash_adaptive`` (log₂N-derived band prefix, measured flat)
     past the knee rather than going quadratic.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     _guard_fixed_band_corpus(
         docs.count(),
         SIMHASH_WIDE_SATURATION_DOCS,
@@ -839,7 +839,7 @@ _MINHASH_B = (
 
 def _minhash_sig_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, m0..m15) MinHash signature via one explode + one groupBy."""
-    sh = _shingles_spark(load_table(spark, sf_dir, "documents", spread=True))
+    sh = _shingles_spark(load_table(spark, sf_dir, "documents"))
     x = (
         F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("bigint")
         % MINHASH_P
@@ -967,7 +967,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH, NGram, RegexTokenizer
 
-    docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tokenizer = RegexTokenizer(
         inputCol="text", outputCol="tokens", pattern=r"\s+", minTokenLength=1
     )
@@ -1104,7 +1104,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     60-bit-hamming contract the adaptive sibling cannot reproduce — it
     keeps the raise.)
     """
-    e = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if e.count() > EMB_LSH_SATURATION_VECS:
         return dedup_embedding_lsh_adaptive(spark, sf_dir)
     dim = _emb_dim(e)
@@ -1396,7 +1396,7 @@ def dedup_embedding_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to ``dedup_embedding_lsh`` (pinned in
     tests/test_extensions.py).
     """
-    e = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     dim = _emb_dim(e)
     if dim is None:
         return _empty_pairs(spark)
@@ -1504,7 +1504,7 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     index buckets it collides with — no full-corpus rescan, no N² term,
     the same O(batch) admission cost as the text-side check.
     """
-    e = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     dim = _emb_dim(e)
     if dim is None:
         return spark.createDataFrame(
@@ -1621,7 +1621,7 @@ def docs_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture grain groups on the window text itself so the DuckDB oracle
     is byte-identical.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     w = SUBSTR_WINDOW
     base = docs.select(
         "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("t")
@@ -1776,7 +1776,7 @@ def dedup_simhash_adaptive(
     with first-agreeing-band single-emission — no N^2 term, no post-join
     distinct.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     if bpb is None:
         bpb = _adaptive_simhash_bpb(docs.count())
     trunc = SIMHASH_REGION_BITS - bpb
@@ -1887,7 +1887,7 @@ def dedup_simhash_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     (values unchanged — the distinct runs on the token itself either
     way; 3-scale parity re-proven)."""
     toks = _distinct_token_md5(
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
     ).localCheckpoint()
     parts = [
         fn(spark, sf_dir, _toks=toks).select(
@@ -1926,7 +1926,7 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the containment denominator is a broadcast-size lookup. One extra
     ``least`` per candidate pair is the entire added cost.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     return _ngram_containment(docs, NGRAM_DF_CAP)
 
 
@@ -1984,7 +1984,7 @@ def dedup_ngram_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a total-order sort of the union buys nothing (the
     ``dedup_simhash_methods`` rule).
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     s = _ngram_scored(docs, NGRAM_DF_CAP)
     methods = F.array_compact(
         F.array(

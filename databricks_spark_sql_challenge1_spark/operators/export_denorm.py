@@ -57,8 +57,8 @@ def order_export_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     only lineitem⋈orders shuffles — and AQE may convert even that to
     broadcast at small SF.
     """
-    l = load_table(spark, sf_dir, "lineitem", spread=True).alias("l")
-    o = load_table(spark, sf_dir, "orders", spread=True).alias("o")
+    l = load_table(spark, sf_dir, "lineitem").alias("l")
+    o = load_table(spark, sf_dir, "orders").alias("o")
     c = load_table(spark, sf_dir, "customer").alias("c")
     n = load_table(spark, sf_dir, "nation").alias("n")
     r = load_table(spark, sf_dir, "region").alias("r")

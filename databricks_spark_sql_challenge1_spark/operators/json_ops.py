@@ -78,7 +78,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     -2599 exactly ON the .00005 boundary where the engines round apart
     (r18 integer-average scan; the lang_stats witness measured the
     scale-2 sibling end-to-end)."""
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     k = _k_long()
     return (
         events.withColumn("k", k)
@@ -110,7 +110,7 @@ def events_json_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed struct, prunable) then bucket-aggregate — the parse is the
     shared ``_k_long`` helper so the integer-k contract stays
     single-sourced (round-13 review)."""
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     return (
         events.select((_k_long() % 10).alias("k_bucket"))
         .groupBy("k_bucket")
@@ -157,7 +157,7 @@ def events_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside whole-stage codegen — one scan, no shuffle before the final
     per-type aggregate.
     """
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     k = _k_long()
     payload = F.to_json(
         F.struct(

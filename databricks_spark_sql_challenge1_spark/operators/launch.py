@@ -188,8 +188,8 @@ def launch_cohort_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort = launches.groupBy("launch_year", "launch_month").agg(
         F.count(F.lit(1)).alias("n_parts_launched")
     )
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    lineitem = load_table(spark, sf_dir, "lineitem", spread=True)
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     facts = lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
     activity = (
         launches.join(facts, launches.partkey == facts.l_partkey)

@@ -217,7 +217,7 @@ def multimodal_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel's ``max(1, ·)`` floor (an empty payload is one empty frame,
     not zero frames; the GREATEST was missing until the r18 ASCII
     multimodal fuzz drove an empty-text doc through both sides)."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     frames = sample_frames(attach_fake_media(docs), frame_size=64, every_kth=4)
     source_map = docs.select("doc_id", "source")
     return (
@@ -252,7 +252,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end multimodal pipeline on fixtures: attach binary → Arrow
     mapInPandas featurize → aggregate. Oracle checks the byte-level metrics
     (the fake payload is the UTF-8 text, so DuckDB can replay it)."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     feats = extract_media_features(attach_fake_media(docs))
     return (
         feats.groupBy("source")
@@ -354,7 +354,7 @@ def multimodal_audio_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty-clip guard (rms 0.0, peak 0 — not the empty-aggregate NULLs;
     r18 ASCII multimodal fuzz find).
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     media = attach_fake_media(docs).select("doc_id", "media_bytes")
     return pcm_audio_stats(media).orderBy(F.col("doc_id").asc())
 
@@ -459,7 +459,7 @@ def multimodal_image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     (compressed → raster) slots in front of the same kernel; only the
     presentation sort shuffles.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     media = attach_fake_media(docs).select("doc_id", "media_bytes")
     return image_thumbnail_stats(media).orderBy(F.col("doc_id").asc())
 
@@ -632,7 +632,7 @@ def multimodal_wav_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle until the presentation sort — identical plumbing to a real
     audio-ingest pipeline where the bytes come from object storage.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     return parse_wav_stats(attach_wav_media(docs)).orderBy(
         F.col("doc_id").asc()
     )
@@ -766,7 +766,7 @@ def multimodal_bmp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two narrow 1:1 Arrow-batched maps; only the presentation
     sort shuffles.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     return parse_bmp_stats(attach_bmp_media(docs)).orderBy(
         F.col("doc_id").asc()
     )
@@ -990,7 +990,7 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle except the presentation sort; per-row work is linear in
     payload bytes.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     return parse_png_stats(attach_png_media(docs)).orderBy(
         F.col("doc_id").asc()
     )
@@ -1242,7 +1242,7 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout, so it's one exchange total).
     """
     docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % GIF_SUBSET_MOD == 0)
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -1783,7 +1783,7 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     CPU-bound sequential kernel across cores, two narrow Arrow maps.
     """
     docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % JPEG_SUBSET_MOD == 1)
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -2241,7 +2241,7 @@ def multimodal_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of splits and the repartition is a no-op to remove.
     """
     docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % FLAC_SUBSET_MOD == 2)
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
@@ -2490,7 +2490,7 @@ def multimodal_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     other codec witnesses do (a no-op at real multi-split corpus scale).
     """
     docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % MP3_SUBSET_MOD == 3)
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
@@ -2842,7 +2842,7 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the repartition is a no-op over many input splits.
     """
     docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % AVI_SUBSET_MOD == 5)
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
@@ -3309,7 +3309,7 @@ def multimodal_h264_nal(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas — the codec-witness pattern.
     """
     docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % H264_SUBSET_MOD == 7)
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )

@@ -157,7 +157,7 @@ def _bm25_scored(
     corpus-statistics frame (round 19: ``retrieval_rrf_rerank`` computes
     the stats once and feeds both its stage-1 lexical leg and its stage-2
     shortlist scorer — one corpus aggregate instead of two)."""
-    dd = _bm25_doc_feats(load_table(spark, sf_dir, "documents", spread=True))
+    dd = _bm25_doc_feats(load_table(spark, sf_dir, "documents"))
     st = _bm25_stats(dd) if _stats is None else _stats
     return dd.crossJoin(F.broadcast(st)).select(
         "doc_id", F.expr(_BM25_SCORE_SQL).alias("_raw")
@@ -410,7 +410,7 @@ def retrieval_rrf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # injected into stage 1 (`_bm25_scored(_stats=...)`), and the
     # {RRF_TOP_K}-row shortlist is localCheckpoint-ed (eager, tiny,
     # recomputed per call), so stage 1 runs exactly once.
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     st = _bm25_stats(_bm25_doc_feats(docs)).localCheckpoint()
     short = (
         retrieval_hybrid_rrf(spark, sf_dir, _stats=st)

@@ -58,7 +58,7 @@ def _guard_stride_corpus(n: int, name: str, scale_config: str) -> None:
 
 
 def _emb(spark, sf_dir) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings", spread=True).select(
+    return load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
     )
 
@@ -1260,7 +1260,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round() tie-breaks are engine-specific); the DuckDB oracle replays the
     identical lambda algebra over DOUBLE[] lists.
     """
-    e = load_table(spark, sf_dir, "embeddings", spread=True).select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     # Zero-vector guard (ADVICE r6): an all-zero embedding would make
@@ -1497,7 +1497,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines fold d = 1..64 in sequence order and the oracle rounds to
     the shared 4-decimal scale.
     """
-    emb = load_table(spark, sf_dir, "embeddings", spread=True)
+    emb = load_table(spark, sf_dir, "embeddings")
     cols = [
         F.expr(
             f"""round(aggregate(sequence(1, {EMB_DIM}), cast(0 as double),
@@ -1566,11 +1566,10 @@ def similarity_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall audit pays (run on a sampled query set, as here).
     """
     # Each leg feeds two aggregates below (hits + its per-query count);
-    # unmaterialized, the whole leg plan evaluated twice per run — one
-    # in-plan materialization per leg halves the audit's cost (round-18;
-    # Q·k rows each). cache(), not localCheckpoint (ADVICE r18 fixed the
-    # comment): lazy, built once inside the timed action, and its
-    # post-materialization stats are visible to AQE.
+    # unmaterialized, the whole leg plan evaluated twice per run. Each leg
+    # is instead materialized eagerly with localCheckpoint: built once,
+    # here, before the action runs, and read by both aggregates (Q·k rows
+    # each).
     exact = (
         similarity_topk(spark, sf_dir)
         .select("query_id", "neighbor_id")
@@ -1583,8 +1582,7 @@ def similarity_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Explicit broadcasts: unconditional by design, justified by the
     # sampled-query contract (Q·k <= N_QUERIES*TOP_K rows per leg — see the
-    # docstring) rather than by the planner's threshold, which the lazy
-    # cached legs carry no size estimate for at plan time.
+    # docstring) rather than by the planner's size threshold.
     hits = (
         exact.join(F.broadcast(approx), ["query_id", "neighbor_id"])
         .groupBy("query_id")

@@ -43,7 +43,7 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id, no non-equi join, no per-key explosion. Verified identical
     to DuckDB's native ASOF LEFT JOIN.
     """
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     left = events.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", F.lit(1).alias("side")
     )
@@ -103,7 +103,7 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Funnel analysis: signup → first subsequent purchase, with a 1-hour
     conversion window — two key-partitioned aggregates + one broadcastable
     join, no per-event state."""
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     s = (
         events.where(F.col("event_type") == "signup")
         .groupBy("user_id")
@@ -152,7 +152,7 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern, shuffling on (user, bucket) only. Verified identical to
     DuckDB's native non-equi join.
     """
-    events = load_table(spark, sf_dir, "events", spread=True).select(
+    events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros("ts").alias("us")
     )
     bucket = F.floor(F.col("us") / RANGE_WINDOW_US)
@@ -216,7 +216,7 @@ def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id and a tiny #types² aggregate. The per-source normalization is a
     window over the aggregated frame — #types rows, negligible at any scale.
     """
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = load_table(spark, sf_dir, "events")
     nxt = F.lead("event_type").over(
         Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     )
@@ -295,7 +295,7 @@ locf_rows AS (
 def _gapfill_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, hr, v): the observed hourly integer-cent aggregate both
     gap-fill legs consume — the DataFrame twin of the template's obs CTE."""
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("hr")
     ).agg(F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("v"))

@@ -44,7 +44,7 @@ ORDER BY doc_id ASC
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish-regex token counts per document."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(_tokens()).alias("n_ws_tokens"),
@@ -80,7 +80,7 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality signals: token count, mean token length,
     punctuation ratio, and a composite quality score (length-saturating ×
     punctuation-penalty) — the standard pretraining-filter features."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = _tokens()
     n_tokens = F.size(toks)
     n_chars = F.length("text")
@@ -140,7 +140,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     A real pipeline swaps the score arrays for char-n-gram profiles; the
     dataflow (per-doc array scoring, no shuffle) is identical.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim("text")), r"\s+")
 
     def stopword_hits(words: tuple[str, ...]) -> Column:
@@ -199,7 +199,7 @@ def lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale-0 is the boundary-safe class: the inputs are identical doubles
     (exact integer numerator, one division) and every N.5 is
     binary-exact."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     n = F.count(F.lit(1))
     return (
         docs.groupBy("lang")
@@ -253,7 +253,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF by pure SQL aggregation (corpus = language groups): term
     frequency per lang × ln(N/df), top-5 terms per lang. Two shuffles
     (term-level, lang-level) regardless of corpus size."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "lang",
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term"),
@@ -293,7 +293,7 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the classic winnowing selection; identical windows → identical
     fingerprints across documents)."""
     return _rolling_fingerprint_leg(
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
     ).orderBy(F.col("doc_id").asc())
 
 
@@ -405,7 +405,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable per-document fingerprint (md5 of normalized text) + a 60-bit
     integer form for compact joins/bloom filters at scale."""
     return _md5_fingerprint_leg(
-        load_table(spark, sf_dir, "documents", spread=True)
+        load_table(spark, sf_dir, "documents")
     ).orderBy(F.col("doc_id").asc())
 
 
@@ -476,7 +476,7 @@ def doc_fingerprint_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     three stages co-partition on doc_id with zero extra shuffles beyond
     the rolling leg's own aggregation exchange.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         _md5_fingerprint_leg(docs)
         .join(_rolling_fingerprint_leg(docs), "doc_id", "left")
@@ -523,7 +523,7 @@ def corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     freq = (
         docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("term"))
         .groupBy("term")
@@ -570,7 +570,7 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     c = (
         docs.select(
             "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
@@ -649,7 +649,7 @@ def docs_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     key at corpus scale. Docs with < 3 tokens have no 3-gram and drop out on
     both engines.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     # < 3 tokens: filtered, not clamped (same rule and reason as
     # _shingles_spark — Spark sequence(1, 0) descends into slice(0))
     shingles = F.expr(
@@ -789,7 +789,7 @@ def tfidf_doc_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term")
     )
@@ -923,7 +923,7 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_nll is rounded identically on both engines before the cutoff
     comparison so bucket membership cannot drift.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
     )
@@ -1034,7 +1034,7 @@ def docs_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses scale-0 ROUND of the exact integer sum over COUNT, and
     MIN/MAX divide exactly.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim("text"), r"\s+")
     n_tokens = F.size(toks)
     n_punct = F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", ""))
@@ -1165,7 +1165,7 @@ def docs_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is a narrow map over the corpus scan, pipelined with whatever
     else reads the documents table.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     aug = docs.select(
         "doc_id", F.expr(_PII_AUG_SQL.replace("VARCHAR", "STRING")).alias("t")
     )
@@ -1238,7 +1238,7 @@ def corpus_privacy_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(clean)), one per-lang aggregate — the same two-exchange profile as
     the quality assembly, measured flat-to-linear for every stage family.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     aug = docs.select(
         "doc_id",
         "lang",
@@ -1336,7 +1336,7 @@ def docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort would not exist; it is here so the driver hash-checks every
     document's probability, not a sample.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim("text")), r"\s+")
     stopset = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
     feat = docs.select(
@@ -1524,7 +1524,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list:
     the loop would otherwise need. Tie-breaks ((-freq, lsym, rsym) with
     Python codepoint string order) match both engines' binary string
     ORDER BY, since UTF-8 byte order equals codepoint order."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     top = (
         docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("word"))
         # ADVICE r12: an empty token (whitespace-only text) would diverge —
@@ -1640,7 +1640,7 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_bpe_apply_merge` kernel the trainer uses, so train and apply cannot
     drift; the oracle replays both halves declaratively (the trainer's
     best-pair argmax CTEs feed the vocabulary-side merge chain)."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     dwords = (
         docs.select(
             "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("word")

@@ -60,7 +60,7 @@ def docs_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines need for leakage audits. Pure projection: no shuffle, scales
     as a map over the corpus.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("bigint")
@@ -108,7 +108,7 @@ def token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition key — production would sub-shard (lang, md5-bucket) and pack
     within shards; the window algebra is identical.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.trim("text"), r"\s+"))
     w = (
         Window.partitionBy("lang")
@@ -167,7 +167,7 @@ def docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap factor (~2× at stride = size/2) — bounded, predictable fan-out
     at any corpus size.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim("text"), r"\s+")
     starts = F.expr(f"sequence(0, size(toks) - 1, {CHUNK_STRIDE})")
     chunk = F.expr(f"slice(toks, start + 1, {CHUNK_TOKENS})")
@@ -223,7 +223,7 @@ def docs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the per-doc counts, no corpus×corpus term. Flagged docs are what a
     training pipeline drops before packing.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     sh = _shingles_spark(docs)
     bench = (
         sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()
@@ -284,7 +284,7 @@ def docs_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     1×1 scalar cross join for the global min — the corpus-side pass is a
     pure map at any scale.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("bigint")
@@ -344,7 +344,7 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     size), so everything after the first aggregate is driver-free and
     broadcast-cheap. Weights are ROUNDed identically on both engines.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     g = (
         docs.groupBy("lang", "source")
         .agg(
@@ -407,7 +407,7 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 rank makes membership independent of input order and engine, so
     reruns and backfills select the same sample.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang", "source").orderBy(
         F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
@@ -499,7 +499,7 @@ def docs_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle) HAVING-k count and the per-doc rollup, which shuffle the
     match candidates only.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     sh = _shingles_spark(docs)
     bench = (
         sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()
@@ -608,7 +608,7 @@ def jsonl_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_jsonl,
     )
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     # Deterministic per-sf_dir (rerun = same path, overwrite mode handles
     # it) but user-scoped: a fixed world-writable /tmp name could be raced
@@ -734,7 +734,7 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         _simhash_wide_sig,
     )
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim("text"), r"\s+")
     stats = docs.select(
         "doc_id",
@@ -835,7 +835,7 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratum-grain table — nothing after the first aggregate touches corpus
     rows. ROUND on both engines buffers the ulp-level pow/summation drift.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     g = docs.groupBy("lang").agg(
         F.sum(F.size(F.split(F.trim("text"), r"\s+")))
         .cast("bigint")
@@ -910,7 +910,7 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision for the near-zero winning keys; ``+ 0`` immunizes the
     DuckDB side against -0.0 (CLAUDE.md rounding rule).
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     hw = docs.select(
         "doc_id",
         "lang",
@@ -988,7 +988,7 @@ def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_orc,
     )
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     uid = os.getuid() if hasattr(os, "getuid") else "na"
     out = os.path.join(
@@ -1096,7 +1096,7 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     under any partitioning, any engine, any summation order; no
     floating-point ever crosses a shuffle boundary.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang", F.split(F.lower(F.trim("text")), r"\s+").alias("t")
     )
@@ -1257,7 +1257,7 @@ def docs_contamination_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     candidate relation joins against, and each daily batch pays
     O(batch), not O(corpus).
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = load_table(spark, sf_dir, "documents")
     sh = _shingles_spark(docs)
     bench = (
         sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()

@@ -37,7 +37,7 @@ ORDER BY window_start ASC, event_type ASC
 )
 def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event type (F.window)."""
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
@@ -74,7 +74,7 @@ ORDER BY window_start ASC
 )
 def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows: 1-hour length, 30-minute slide (each event in 2)."""
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "1 hour", "30 minutes"))
         .agg(
@@ -106,7 +106,7 @@ def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand total in one pass (GROUP BY ROLLUP over the time hierarchy — the
     single-shuffle equivalent of maintaining three materialized rollup
     levels)."""
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     return (
         events.select(
             F.year("ts").alias("y"),
@@ -163,7 +163,7 @@ def events_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     implements natively; the stateful streaming variant is
     ``streaming.events_stream.session_counts_stream``.
     """
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
@@ -232,7 +232,7 @@ def events_rolling_7d_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     e = events.select(
         "event_id",
         "user_id",
@@ -291,7 +291,7 @@ def events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     events. z is rounded to 3 decimals on both engines before the threshold
     compare so stddev implementation drift (ulp-level) cannot flip a flag.
     """
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     h = (
         events.groupBy("event_type", F.date_trunc("hour", "ts").alias("hour"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -345,7 +345,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (cohort_week, weeks_since) — low cardinality. Both week truncations
     are ISO-Monday on both engines.
     """
-    events = load_table(spark, sf_dir, "events", spread=True)
+    events = load_table(spark, sf_dir, "events")
     f = events.groupBy("user_id").agg(
         F.to_date(F.min(F.date_trunc("week", "ts"))).alias("cohort_week")
     )

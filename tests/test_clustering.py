@@ -192,3 +192,26 @@ def test_cluster_components_match_union_find_at_sf01(spark):
         comp.setdefault(find(d), []).append(d)
     want = {d: min(ms) for ms in comp.values() for d in ms}
     assert sum(1 for d in labels if labels[d] != want[d]) == 0
+
+
+def test_connected_components_round_cap_is_loud(spark):
+    """Hitting ``max_rounds`` before the fixpoint raises instead of returning
+    half-propagated labels; the default cap converges to union-find labels."""
+    import pytest
+
+    from databricks_spark_sql_challenge1_spark.operators.clustering import (
+        connected_components,
+    )
+    from tests.test_properties import _union_find
+
+    n = 8
+    edges = [(i, i + 1) for i in range(n - 1)]  # path: diameter 7
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    pairs = spark.createDataFrame(edges, "doc_1 long, doc_2 long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(nodes, pairs, max_rounds=1)
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(nodes, pairs).collect()
+    }
+    assert got == _union_find(n, edges)

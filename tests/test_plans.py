@@ -27,18 +27,6 @@ from tests.conftest import SF_DIR
 
 
 
-def _is_spread_exchange(line: str) -> bool:
-    """The round-18 input-parallelism floor (catalog._maybe_spread) adds one
-    explicit hash repartition by the TABLE ID right above a byte-small scan
-    so narrow compute-heavy stages parallelize (no-op at sf0.001 where every
-    table is under the 256 KB gate); it is the only non-range exchange the
-    narrow-map plans may carry. ADVICE r18: also require the explicit
-    df.repartition origin tag (REPARTITION_BY_NUM/_COL) so a future
-    planner-introduced hash shuffle on the same key can't slip past the
-    narrow-plan pins."""
-    return ("hashpartitioning(doc_id" in line or "hashpartitioning(vec_id" in line) \
-        and "REPARTITION_BY" in line
-
 def test_filter_pushdown_to_scan(spark):
     """The status filter must reach the orders parquet scan."""
     df = top_abandoned_products(spark, SF_DIR)
@@ -54,6 +42,22 @@ def test_column_pruning(spark):
     joined = " ".join(schemas)
     assert "l_extendedprice" not in joined and "o_totalprice" not in joined, schemas
 
+
+
+def test_scans_carry_no_repartition_at_sf001(spark):
+    """Scans keep their file splits: no explicit repartition exchange is
+    added above orders or lineitem, which at sf0.01 are large enough for
+    any size-gated input repartition to fire."""
+    import os
+
+    import pytest
+
+    sf001 = "/root/testdata/sf0.01"
+    if not os.path.exists(os.path.join(sf001, "orders.parquet")):
+        pytest.skip("sf0.01 fixture not present")
+    for q in (top_abandoned_pairs, order_export_denorm):
+        plan = simple_plan(q(spark, sf001))
+        assert "REPARTITION_BY" not in plan, plan
 
 
 def test_dim_joins_broadcast(spark):
@@ -113,9 +117,7 @@ def test_chunk_windows_is_narrow(spark):
     assert "Join" not in plan, plan
     assert "HashAggregate" not in plan, plan
     exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    assert all(
-        "rangepartitioning" in ln or _is_spread_exchange(ln) for ln in exchanges
-    ), plan
+    assert all("rangepartitioning" in ln for ln in exchanges), plan
 
 
 
@@ -188,9 +190,7 @@ def test_round6_operators_plan_shapes(spark):
     qplan = simple_plan(embedding_quantize_int8(spark, SF_DIR))
     assert "Join" not in qplan and "HashAggregate" not in qplan, qplan
     exchanges = [ln for ln in qplan.splitlines() if "Exchange" in ln]
-    assert all(
-        "rangepartitioning" in ln or _is_spread_exchange(ln) for ln in exchanges
-    ), qplan
+    assert all("rangepartitioning" in ln for ln in exchanges), qplan
 
     mplan = simple_plan(corpus_temperature_mixture(spark, SF_DIR))
     assert "CartesianProduct" not in mplan, mplan
@@ -229,10 +229,7 @@ def test_multimodal_raw_kernels_are_narrow(spark):
         assert "MapInPandas" in plan, plan
         assert "Join" not in plan and "HashAggregate" not in plan, plan
         exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-        assert all(
-            "rangepartitioning" in ln or _is_spread_exchange(ln)
-            for ln in exchanges
-        ), plan
+        assert all("rangepartitioning" in ln for ln in exchanges), plan
 
 
 

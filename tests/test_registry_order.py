@@ -22,42 +22,24 @@ DRIVER_WINDOW = 50
 # was accidentally left out of the window). Update this literal whenever
 # a query is added or its output/oracle changes.
 MUST_VERIFY = {
-    # NEW round 18 (VERDICT r17 #5): the key-skew witness's
-    # driver-checkable registration — zero driver evidence until r18
-    "streaming_parity_ingest_skew",
-    # oracle SQL rewritten post-evidence by the round-17 integer-log2
-    # migration (089c69e; VERDICT r17 #1 pins them at the head of the
-    # r18 window — 3-scale parity re-proven twice, driver row lands here)
-    "dedup_embedding_lsh_adaptive",
-    "dedup_embedding_clusters",
-    "dedup_embedding_incremental",
-    # changed MID-round-18 by the layout-invariance fix (the streaming
-    # file-source glob, events_stream.py:35) and ALREADY inside the
-    # committed r18 window — its driver row this round is the
-    # post-change evidence for the _events_stream code site; the other
-    # changed twins head the r19 NEXT_WINDOW or refresh at r20 on the
-    # natural cadence (see registry.py NEXT_WINDOW comment)
-    "streaming_parity_lateness",
-    # oracle empty-payload legs fixed late-r18 by the ASCII multimodal
-    # fuzz (GREATEST frame floor / CASE n=0 rms+peak; value-invariant on
-    # every fixture — empty text never occurs there — and 3-scale
-    # re-proven); audio_pcm_stats sits at r18 window idx 29 so its
-    # post-change row lands THIS round; its sibling
-    # multimodal_frame_stats is in the committed r19 NEXT_WINDOW (the
-    # precedented changed-post-spend pattern, same as the r17 log2 trio)
-    "multimodal_audio_pcm_stats",
-    # avg_value moved to the integer-cents formulation late-r18 (the
-    # triple-composed probe caught ROUND(AVG(money), 2) landing a
-    # sub-cent average ON the .005 boundary — rounding apart
-    # cross-engine and flipping with summation order); in the r18
-    # window, value-invariant at all three fixture scales (re-proven)
-    "orders_unpivot_metrics",
-    # same r18 integer-average boundary campaign: ROUND(AVG(int), 2)
-    # measured diverging end-to-end on a 40-doc boundary corpus; moved
-    # to the integer-grain formulation, in the r18 window, 3-scale
-    # re-proven (events_json_extract, the scale-4 sibling, is in the
-    # committed r19 NEXT_WINDOW)
-    "lang_stats",
+    # rewritten in round 19 (394c2eb: plan collapses and shared signature
+    # frames; 3-scale parity re-proven at change time) with no driver row
+    # since: the round-19 run re-ran the round-18 window
+    "customers_kmv_setops",
+    "scd2_cdc_apply",
+    "retrieval_rrf_rerank",
+    "dedup_incremental",
+    "dedup_simhash_methods",
+    # changed in round 18 (the streaming file-source glob,
+    # events_stream.py) with the post-change row still due
+    "streaming_parity_dedup",
+    "streaming_parity_incremental_dedup",
+    "streaming_parity_user_state",
+    # oracle changes late in round 18 (empty-payload frame floor; integer-
+    # grain average; integer score units), post-change row still due
+    "multimodal_frame_stats",
+    "events_json_extract",
+    "docs_quality_tiers",
 }
 
 

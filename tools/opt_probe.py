@@ -66,6 +66,8 @@ def _cold_one(name: str) -> None:
 
 
 def _cold_median(name: str) -> float | None:
+    """Median of the cold subprocess runs, or None after reporting the first
+    run that crashed, timed out or printed no timing line."""
     runs = []
     for _ in range(_COLD_SUBPROC_RUNS):
         try:
@@ -74,13 +76,25 @@ def _cold_median(name: str) -> float | None:
                 capture_output=True, text=True, timeout=600,
                 env=os.environ.copy(),
             )
-            last = out.stdout.strip().splitlines()[-1]
-            runs.append(float(json.loads(last)["cold_sec"]))
-        except Exception:
+        except subprocess.TimeoutExpired as e:
+            _report_cold_failure(name, "timeout", e.stderr)
             return None
+        lines = out.stdout.strip().splitlines()
+        if out.returncode != 0 or not lines:
+            _report_cold_failure(name, out.returncode, out.stderr)
+            return None
+        runs.append(float(json.loads(lines[-1])["cold_sec"]))
     med = sorted(runs)[len(runs) // 2]
     print(json.dumps({"query": name, "cold_median_sec": med, "runs": runs}))
     return med
+
+
+def _report_cold_failure(name: str, returncode, stderr) -> None:
+    if isinstance(stderr, bytes):
+        stderr = stderr.decode(errors="replace")
+    tail = "\n".join((stderr or "").strip().splitlines()[-20:])
+    print(f"cold probe failed: {name} (returncode {returncode})\n{tail}",
+          file=sys.stderr)
 
 
 def main() -> int:
@@ -91,13 +105,15 @@ def main() -> int:
         _cold_one(names[0])
         return 0
     if mode == "cold":
-        out = {}
+        out, failed = {}, []
         for name in names:
             med = _cold_median(name)
-            if med is not None:
+            if med is None:
+                failed.append(name)
+            else:
                 out[name] = med
-        print(json.dumps({"cold_medians": out}))
-        return 0
+        print(json.dumps({"cold_medians": out, "failed": failed}))
+        return 1 if failed else 0
     if mode in ("explain", "both"):
         tag = names[0]
         names = names[1:]
