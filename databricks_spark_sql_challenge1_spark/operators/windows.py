@@ -161,7 +161,7 @@ def events_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At scale this is the shuffle-on-user_id + per-key ordered merge Spark
     implements natively; the stateful streaming variant is
-    ``streaming.events_stream.session_counts_stream``.
+    ``streaming.events_stream.streaming_session_30m``.
     """
     events = load_table(spark, sf_dir, "events")
     return (

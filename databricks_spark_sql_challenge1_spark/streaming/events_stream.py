@@ -2,70 +2,104 @@
 (SURVEY.md §2.10: the reference has no streaming; this is the true-streaming
 variant of operators/windows.py, with watermarks for late data).
 
-Pattern: file-source readStream over the table parquet via the glob path
-``{table}.parquet*`` — layout-agnostic: it matches the fixture's single
-file (whose parent then serves as the directory ``basePath`` the file
-source requires) AND a production-shaped ``{table}.parquet/`` DIRECTORY
-of part-files, which the source recurses into. The previous
-``pathGlobFilter={table}.parquet`` formulation matched LEAF FILE names
-only, so a directory-shaped table silently streamed 0 rows (found by
-tools/layout_probe.py, r18; pinned in
-tests/test_layout_invariance_contract.py). Event-time window agg behind
-a watermark,
-``availableNow`` trigger draining to a memory sink — the batch-equivalent
-execution mode, so results can be asserted against the batch operators.
+Every query here is a stream pipeline plus one of two drain helpers, which
+are the only places a stream becomes a batch DataFrame:
 
-Custom stateful processing uses ``applyInPandasWithState``. Its Spark-4
-successor ``transformWithStateInPandas`` (typed state handles, timers) was
-evaluated in round 4 but cannot run in this container: its state-server
-protocol requires the ``protobuf`` Python package, which is not installed
-(verified: the streaming Python runner crashes importing
-``pyspark.sql.streaming.proto.StateMessage_pb2``). The migration is
-mechanical when the dependency exists — same groupBy key, the update
-function becomes a ``StatefulProcessor`` with ``handle.getValueState``.
+- ``_table_stream`` is the one file-source ``readStream``: schema pinned
+  from the static read, over the glob path ``{table}.parquet*``. The glob
+  is layout-agnostic: it matches the fixture's single file (whose parent
+  then serves as the directory ``basePath`` the file source requires) AND
+  a production-shaped ``{table}.parquet/`` DIRECTORY of part-files, which
+  the source recurses into. A ``pathGlobFilter={table}.parquet`` read
+  matches LEAF FILE names only, so a directory-shaped table would stream
+  0 rows (found by tools/layout_probe.py, r18; pinned in
+  tests/test_layout_invariance_contract.py).
+- ``_drain_to_memory`` runs the query with the ``availableNow`` trigger
+  into a memory sink — the batch-equivalent execution mode, so results can
+  be asserted against the batch operators. It is the package's only
+  memory-sink ``writeStream``.
+- ``_drain_updates`` is the update-mode drain: update mode re-emits a key
+  in every micro-batch that touches it, so it keeps the settled (last)
+  emission per key.
+
+Custom stateful processing uses ``applyInPandasWithState``.
 """
 
 from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import (
     _heal_events_ts,
     ensure_session_confs,
+    load_table,
     table_path,
 )
 from databricks_spark_sql_challenge1_spark.registry import query
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over events.parquet (schema pinned from the static read;
-    nanos-long ts converted exactly as in catalog.load_table)."""
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """readStream over ``{name}.parquet`` with the schema pinned from the
+    static read; the glob path reads both the single-file and the
+    directory-shaped table (module docstring)."""
     ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    # Glob path, not pathGlobFilter: the filter matches leaf FILE names
-    # only, so a directory-shaped events.parquet/ (every production
-    # layout) would stream 0 rows; the glob resolves both shapes (module
-    # docstring; tests/test_layout_invariance_contract.py).
-    stream = spark.readStream.schema(raw_schema).parquet(
-        table_path(sf_dir, "events") + "*"
+    path = table_path(sf_dir, name)
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(
+        path + "*"
     )
-    return _heal_events_ts(stream)
 
 
-def _drain_to_memory(windowed: DataFrame, spark: SparkSession) -> DataFrame:
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events stream, nanos-long ts converted exactly as in
+    catalog.load_table."""
+    return _heal_events_ts(_table_stream(spark, sf_dir, "events"))
+
+
+def _drain_to_memory(
+    df: DataFrame, spark: SparkSession, mode: str = "complete"
+) -> DataFrame:
+    """Run ``df`` to completion (availableNow) into a fresh memory sink in
+    output ``mode`` and return the sink as a batch table."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        windowed.writeStream.format("memory")
+    (
+        df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("complete")
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
     return spark.table(name)
+
+
+def _drain_updates(
+    df: DataFrame, spark: SparkSession, key: str, grows: str
+) -> DataFrame:
+    """Update-mode drain settled to one row per ``key``: update mode emits
+    a key again in each micro-batch that touches it, and ``grows`` only
+    increases across emissions, so its maximum marks the settled row."""
+    w = Window.partitionBy(key).orderBy(F.col(grows).desc())
+    return (
+        _drain_to_memory(df, spark, "update")
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") == 1)
+        .drop("rk")
+    )
+
+
+def _count_and_sum_value() -> tuple[Column, Column]:
+    """``n_events`` and the cent-exact ``sum_value`` — the batch twins'
+    agg expressions (operators/windows.py)."""
+    return (
+        F.count(F.lit(1)).alias("n_events"),
+        (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
+            "sum_value"
+        ),
+    )
 
 
 @query("streaming_tumbling_1h")  # rows-only: streaming not oracle-expressible
@@ -73,16 +107,11 @@ def streaming_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1h windows per event type with a 1h watermark, executed as a
     stream drained with availableNow. Semantics pinned by
     tests/test_streaming.py: equal to the batch events_tumbling_1h."""
-    stream = _events_stream(spark, sf_dir)
     windowed = (
-        stream.withWatermark("ts", "1 hour")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
-        )
+        .agg(*_count_and_sum_value())
         .select(
             F.col("window.start").alias("window_start"),
             "event_type",
@@ -142,147 +171,29 @@ def streaming_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    stream = _events_stream(spark, sf_dir)
-    profiled = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        profiled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update mode may emit a row per micro-batch per user; keep the final one
-    out = spark.table(name)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-    )
-
-
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` needs the ``protobuf`` Python package
-    for its state-server wire protocol (the streaming Python runner imports
-    ``pyspark.sql.streaming.proto.StateMessage_pb2``); absent in this
-    container — probed here so the capability gap is visible in-tree
-    (tests/test_streaming.py::test_streaming_user_state_tws).
-    Re-checked at round-16 start (2026-08-16), round-17 (2026-08-16) and
-    round-18 (2026-08-16): still absent."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def streaming_user_state_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``streaming_user_state`` on the Spark-4 ``transformWithStateInPandas``
-    API (typed state handles instead of a single state tuple schema) —
-    same per-user running profile, same output contract, so the batch
-    totals pin in tests applies verbatim. Unregistered: the container
-    lacks the protobuf dependency the TWS state server requires, so this
-    path cannot earn driver evidence here; the witness test skips with a
-    pinned reason and runs for real the moment the dependency appears.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pyspark.sql.streaming.proto.StateMessage_pb2) — not installed "
-            "in this container; use streaming_user_state "
-            "(applyInPandasWithState) instead"
+    profiled = (
+        _events_stream(spark, sf_dir)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
     )
-
-    out_schema = (
-        "user_id long, n_events long, sum_value double, last_ts timestamp"
-    )
-
-    class UserProfile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "profile", "n bigint, s double, last_us bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s, last_us = (
-                self._state.get() if self._state.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-                last_us = max(
-                    last_us, int(pdf["ts"].astype("int64").max()) // 1000
-                )
-            self._state.update((n, s, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(s, 2)],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    stream = _events_stream(spark, sf_dir)
-    profiled = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfile(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        profiled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-    )
+    return _drain_updates(profiled, spark, "user_id", "n_events")
 
 
 @query("streaming_session_30m")  # rows-only
 def streaming_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful session windows (30m gap) per user on the stream — Spark's
     native stateful session operator under a watermark."""
-    stream = _events_stream(spark, sf_dir)
     windowed = (
-        stream.withWatermark("ts", "1 hour")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
-        )
+        .agg(*_count_and_sum_value())
         .select(
             "user_id",
             F.col("session_window.start").alias("session_start"),
@@ -307,9 +218,9 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (SCALE.md §Streaming). Semantics pinned by tests/test_streaming.py
     against the batch distinct-count.
     """
-    stream = _events_stream(spark, sf_dir)
     deduped = (
-        stream.withWatermark("ts", "1 hour")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .dropDuplicates(["user_id", "event_type"])
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_users"))
@@ -317,20 +228,11 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(deduped, spark)
 
 
-@query("streaming_click_attribution")  # rows-only: stream-stream join state
-def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: each purchase attributed to the same
-    user's clicks in the preceding 30 minutes — both sides are unbounded
-    streams, so Spark buffers each side in watermark-bounded join state
-    (the flagship Structured Streaming capability the batch range join
-    can't express over live data).
-
-    The time-bound predicate is what makes the state finite: with both
-    watermarks at 1 hour and the interval at 30 minutes, rows age out of
-    the buffer deterministically. Append output (joins emit no
-    retractions). Semantics pinned by tests/test_streaming.py against the
-    identical batch join.
-    """
+def _click_purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stream-stream interval join behind both click-attribution
+    queries: each purchase paired with the same user's clicks in the
+    preceding 30 minutes, as (user_id, purchase_ts, click_ts,
+    purchase_value) with the raw purchase value."""
     clicks = (
         _events_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -349,27 +251,34 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "1 hour")
     )
-    joined = purchases.join(
+    return purchases.join(
         clicks,
         (F.col("p_user") == F.col("c_user"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES")),
     ).select(
-        F.col("p_user").alias("user_id"),
-        "purchase_ts",
-        "click_ts",
-        F.round(F.col("purchase_value"), 2).alias("purchase_value"),
+        F.col("p_user").alias("user_id"), "purchase_ts", "click_ts", "purchase_value"
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+
+
+@query("streaming_click_attribution")  # rows-only: stream-stream join state
+def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join: each purchase attributed to the same
+    user's clicks in the preceding 30 minutes — both sides are unbounded
+    streams, so Spark buffers each side in watermark-bounded join state
+    (the flagship Structured Streaming capability the batch range join
+    can't express over live data).
+
+    The time-bound predicate is what makes the state finite: with both
+    watermarks at 1 hour and the interval at 30 minutes, rows age out of
+    the buffer deterministically. Append output (joins emit no
+    retractions). Semantics pinned by tests/test_streaming.py against the
+    identical batch join.
+    """
+    pairs = _click_purchase_pairs(spark, sf_dir).withColumn(
+        "purchase_value", F.round("purchase_value", 2)
     )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(pairs, spark, "append")
 
 
 @query("streaming_nation_activity")  # rows-only: streaming not in SQL oracle
@@ -384,9 +293,6 @@ def streaming_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantics pinned by tests/test_streaming.py: equal to the identical
     batch join+window (events ⋈ customer ⋈ nation → F.window agg).
     """
-    from databricks_spark_sql_challenge1_spark.catalog import load_table
-
-    stream = _events_stream(spark, sf_dir)
     dims = (
         load_table(spark, sf_dir, "customer")
         .select(F.col("c_custkey").alias("user_id"), "c_nationkey")
@@ -400,15 +306,11 @@ def streaming_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "nation")
     )
     windowed = (
-        stream.withWatermark("ts", "1 hour")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .join(dims, "user_id")  # stream-static equi-join
         .groupBy(F.window("ts", "1 hour"), "nation")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
-        )
+        .agg(*_count_and_sum_value())
         .select(
             F.col("window.start").alias("window_start"),
             "nation",
@@ -445,7 +347,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest batch). Batch equivalence pinned in tests/test_streaming.py
     against ``dedup_incremental``'s flagged subset.
     """
-    from databricks_spark_sql_challenge1_spark.catalog import table_path
     from databricks_spark_sql_challenge1_spark.operators.dedup import (
         HAMMING_MAX,
         INCREMENTAL_MOD,
@@ -455,13 +356,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_simhash,
     )
 
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
-    # Same layout-agnostic glob as _events_stream (a directory-shaped
-    # documents.parquet/ would stream 0 rows under pathGlobFilter).
-    stream = spark.readStream.schema(raw_schema).parquet(
-        table_path(sf_dir, "documents") + "*"
-    )
+    stream = _table_stream(spark, sf_dir, "documents")
     # 32-bit SimHash as a narrow expression chain (matches text_simhash).
     bit_terms = " + ".join(
         f"(CASE WHEN aggregate(hs, 0L, (acc, h) -> acc + "
@@ -566,30 +461,17 @@ def streaming_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    stream = _events_stream(spark, sf_dir)
-    monitored = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    monitored = (
+        _events_stream(spark, sf_dir)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        monitored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-        .orderBy(F.col("user_id").asc())
+    return _drain_updates(monitored, spark, "user_id", "n_events").orderBy(
+        F.col("user_id").asc()
     )

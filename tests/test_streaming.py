@@ -341,46 +341,6 @@ def test_ingest_skew_stress_witness(spark, tmp_path):
     assert hot_n >= n_src * 0.4
 
 
-def test_streaming_user_state_tws(spark):
-    """Witness for the transformWithStateInPandas capability gap (VERDICT
-    r8 #7): the TWS variant of the per-user running profile runs and ends
-    at the batch totals — SKIPPED with a pinned reason while the container
-    lacks the protobuf package its state server requires, and exercised
-    for real the moment the dependency appears."""
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from databricks_spark_sql_challenge1_spark.catalog import load_table
-    from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
-        streaming_user_state_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_user_state_tws(spark, SF_DIR)
-        pytest.skip(
-            "transformWithStateInPandas needs the protobuf package "
-            "(state-server wire protocol) — not installed in this "
-            "container; applyInPandasWithState covers the capability "
-            "(streaming_user_state)"
-        )
-
-    state = streaming_user_state_tws(spark, SF_DIR)
-    batch = (
-        load_table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    cols = ["user_id", "n_events", "sum_value", "last_ts"]
-    assert _rows(state.select(*cols)) == _rows(batch.select(*cols))
-
-
 def test_streaming_attribution_equals_batch_join(spark):
     """The stream-stream interval join must emit exactly the batch interval
     join's rows (availableNow drains everything; append mode, no late data
@@ -715,3 +675,56 @@ def test_lateness_accounting_identities(spark):
         assert r.n_ontime + r.n_late_kept + r.n_dropped == b.n_total, b.window_start
         assert r.n_late_kept >= 0 and r.n_dropped >= 0
     assert seen_windows == len(out)
+
+
+def test_drain_updates_settles_across_micro_batches(spark, tmp_path):
+    """The update-mode settle path across real micro-batches: three
+    one-file batches read with maxFilesPerTrigger=1 make an update-mode
+    count re-emit keys, and ``_drain_updates`` must keep exactly the
+    settled count per key while the raw sink holds every emission."""
+    import glob
+    import os
+    import shutil
+    import time as _time
+
+    from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
+        _drain_to_memory,
+        _drain_updates,
+    )
+
+    batches = [[(1,), (2,)], [(1,), (2,), (3,)], [(1,)]]
+    stream_dir = tmp_path / "stream"
+    stream_dir.mkdir()
+    for i, rows in enumerate(batches):
+        pdir = str(tmp_path / f"p{i}")
+        spark.createDataFrame(rows, "k bigint").coalesce(1).write.parquet(pdir)
+        (part,) = glob.glob(os.path.join(pdir, "part-*.parquet"))
+        dst = str(stream_dir / f"batch{i}.parquet")
+        shutil.move(part, dst)
+        # distinct mtimes pin the oldest-first processing order
+        os.utime(dst, (_time.time() - 180 + 60 * i,) * 2)
+
+    def counts():
+        return (
+            spark.readStream.schema("k bigint")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(stream_dir))
+            .groupBy("k")
+            .count()
+        )
+
+    raw = sorted(
+        (r.k, r["count"])
+        for r in _drain_to_memory(counts(), spark, "update").collect()
+    )
+    assert raw == [(1, 1), (1, 2), (1, 3), (2, 1), (2, 2), (3, 1)]
+    settled = sorted(
+        (r.k, r["count"])
+        for r in _drain_updates(counts(), spark, "k", "count").collect()
+    )
+    batch = sorted(
+        (r.k, r["count"])
+        for r in spark.read.parquet(str(stream_dir)).groupBy("k").count().collect()
+    )
+    assert settled == batch == [(1, 3), (2, 2), (3, 1)]
+    assert spark.streams.active == []
